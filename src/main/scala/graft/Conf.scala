@@ -22,9 +22,10 @@ object Conf {
     c.set("spark.sql.adaptive.skewJoin.enabled", "true")
     // Deterministic timestamps for oracle comparison.
     c.set("spark.sql.session.timeZone", "UTC")
-    // testdata events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 cannot
-    // map to TimestampType ([PARQUET_TYPE_ILLEGAL]); read it as Long nanos
-    // and convert explicitly (model.Tables.events).
+    // parquet TIMESTAMP(NANOS) (one of the events.ts shapes testdata has
+    // shipped) cannot map to TimestampType in Spark 4
+    // ([PARQUET_TYPE_ILLEGAL]); read it as Long nanos, which the dtype
+    // dispatch in model.Tables.normalizeTs converts to microseconds.
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // graft_* SQL functions (expr.Functions) — idempotent re-registration.
     graft.expr.Functions.register(spark)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Inverted-index keyword retrieval with BM25 ranking (Robertson et al.,
   * Okapi TREC-3) — the lexical search half every curation stack needs
@@ -79,12 +80,17 @@ object Retrieval {
   def bm25Search(postings: DataFrame, queries: DataFrame, k: Int = 5,
                  queryIdCol: String = "query_id",
                  textCol: String = "text"): DataFrame = {
-    val (out, matched) = bm25SearchPlan(postings, queries, k, queryIdCol, textCol)
-    Dedup.materializeAndRelease(out, matched)
+    // a caller who cached `postings` (build once, search many) owns that
+    // cache: it is neither re-persisted nor released here
+    val owned = postings.storageLevel == StorageLevel.NONE
+    val (out, p) = bm25SearchPlan(postings, queries, k, queryIdCol, textCol)
+    if (owned) Dedup.materializeAndRelease(out, p)
+    else Dedup.materializeAndRelease(out)
   }
 
-  /** The un-materialized search plan plus the persisted postings
-    * intermediate — split out so tests can inspect the join strategy
+  /** The un-materialized search plan plus the cached postings
+    * intermediate (the caller's own cache when `postings` already has
+    * one) — split out so tests can inspect the join strategy
     * ([[bm25Search]] localCheckpoints, which truncates lineage). */
   private[graft] def bm25SearchPlan(postings: DataFrame, queries: DataFrame,
                                     k: Int, queryIdCol: String,
@@ -98,7 +104,9 @@ object Retrieval {
     // cover most of the vocabulary), so matched ≈ postings anyway and
     // re-filtering it from the cache per consumer (a broadcast-hash
     // semi-filter over cached rows) is cheaper than materializing both.
-    val p = postings.persist()
+    val p =
+      if (postings.storageLevel == StorageLevel.NONE) postings.persist()
+      else postings
     // global corpus stats: one tiny two-agg pass over the doc-length view
     val docLens = p.select(col("doc_id"), col("dl")).distinct()
     // `div` (not `/`): Column./ on longs is DOUBLE division, which loses

@@ -3,6 +3,7 @@ package graft.sinks
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
 import org.apache.spark.sql.functions._
@@ -14,10 +15,13 @@ import org.apache.spark.sql.functions._
   * receiver dedups on the key — external-api/app.py:6-12).
   *
   * Unlike the reference (driver-side collect + loop), rows are posted from
-  * the executors: `postBatch` runs a `foreachPartition` with one pooled
-  * HttpClient per partition, so at scale the fan-out parallelism is the
-  * partition count, the driver never materializes the batch, and a slow
-  * receiver back-pressures only its partition. */
+  * the executors: `postBatch` runs a `foreachPartition`, so at scale the
+  * fan-out parallelism is the partition count, the driver never
+  * materializes the batch, and a slow receiver back-pressures only its
+  * partition. Every partition of every batch posts through ONE pooled
+  * HttpClient per executor JVM: a client owns a selector thread and a
+  * connection pool, and JDK 17's HttpClient has no `close()`, so a client
+  * per partition would leak both and reconnect on every batch. */
 object HttpSink {
 
   /** Global error counter (best-effort observability, like the reference's
@@ -26,12 +30,19 @@ object HttpSink {
 
   case class Config(endpoint: String, timeoutMs: Int = 1500)
 
+  /** The JVM's shared clients, one per connect timeout (in practice one). */
+  private val clients = new ConcurrentHashMap[Int, HttpClient]()
+
+  private def client(cfg: Config): HttpClient =
+    clients.computeIfAbsent(cfg.timeoutMs, ms => HttpClient.newBuilder()
+      .connectTimeout(Duration.ofMillis(ms.toLong)).build())
+
   private def jsonBody(eventId: Long, contentId: String, eventType: String): String = {
     def q(s: String) = if (s == null) "null" else "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     s"""{"event_id":$eventId,"content_id":${q(contentId)},"event_type":${q(eventType)}}"""
   }
 
-  private def post(client: HttpClient, cfg: Config, eventId: Long,
+  private def post(cfg: Config, eventId: Long,
                    contentId: String, eventType: String): Unit =
     try {
       val req = HttpRequest.newBuilder(URI.create(cfg.endpoint))
@@ -40,7 +51,7 @@ object HttpSink {
         .header("Idempotency-Key", eventId.toString)
         .POST(HttpRequest.BodyPublishers.ofString(jsonBody(eventId, contentId, eventType)))
         .build()
-      client.send(req, HttpResponse.BodyHandlers.discarding())
+      client(cfg).send(req, HttpResponse.BodyHandlers.discarding())
       ()
     } catch {
       // swallow only ordinary failures (connect refused, timeout, 5xx
@@ -52,29 +63,21 @@ object HttpSink {
       case scala.util.control.NonFatal(_) => errors.incrementAndGet(); ()
     }
 
-  /** Executor-side batch fan-out: one client per partition, row-at-a-time
-    * posts (the receiver contract is per-event idempotency keys). */
+  /** Executor-side batch fan-out: row-at-a-time posts through the JVM's
+    * shared client (the receiver contract is per-event idempotency keys). */
   def postBatch(batch: DataFrame, cfg: Config): Unit =
     batch.select(col("event_id").cast("long"), col("content_id").cast("string"),
         col("event_type").cast("string"))
       .foreachPartition { (rows: Iterator[Row]) =>
-        val client = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofMillis(cfg.timeoutMs)).build()
-        rows.foreach { r =>
-          post(client, cfg, r.getLong(0), r.getString(1), r.getString(2))
-        }
+        rows.foreach(r => post(cfg, r.getLong(0), r.getString(1), r.getString(2)))
       }
 
   /** `writeStream.foreach(...)` form for direct streaming use without
     * foreachBatch. Expects (event_id, content_id, event_type) columns. */
   class Writer(cfg: Config) extends ForeachWriter[Row] {
-    @transient private var client: HttpClient = _
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      client = HttpClient.newBuilder().connectTimeout(Duration.ofMillis(cfg.timeoutMs)).build()
-      true
-    }
+    override def open(partitionId: Long, epochId: Long): Boolean = true
     override def process(r: Row): Unit =
-      post(client, cfg, r.getAs[Long]("event_id"),
+      post(cfg, r.getAs[Long]("event_id"),
         r.getAs[String]("content_id"), r.getAs[String]("event_type"))
     override def close(errorOrNull: Throwable): Unit = ()
   }

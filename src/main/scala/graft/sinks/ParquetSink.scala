@@ -39,25 +39,18 @@ object ParquetSink {
     * work. Dynamic partition overwrite: only months present in the data
     * are replaced; run it on recent months, not the whole table. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              filesPerMonth: Int = 1, tsCol: String = "event_ts"): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // localCheckpoint: materializes the read and cuts the file-source
-      // lineage so overwriting the same path is legal. At petabyte scale
-      // compact month-by-month into a temp prefix + atomic rename instead
-      // of holding a month in block storage.
-      spark.read.parquet(dir).localCheckpoint()
-        .repartition(col("event_month"),
-          pmod(xxhash64(col("content_id"), col(tsCol)), lit(filesPerMonth.toLong)))
-        .sortWithinPartitions(col("content_id"), col(tsCol))
-        .write
-        .mode("overwrite")
-        .partitionBy("event_month")
-        .parquet(dir)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+              filesPerMonth: Int = 1, tsCol: String = "event_ts"): Unit =
+    // localCheckpoint: materializes the read and cuts the file-source
+    // lineage so overwriting the same path is legal. At petabyte scale
+    // compact month-by-month into a temp prefix + atomic rename instead
+    // of holding a month in block storage.
+    spark.read.parquet(dir).localCheckpoint()
+      .repartition(col("event_month"),
+        pmod(xxhash64(col("content_id"), col(tsCol)), lit(filesPerMonth.toLong)))
+      .sortWithinPartitions(col("content_id"), col(tsCol))
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("event_month")
+      .parquet(dir)
 }

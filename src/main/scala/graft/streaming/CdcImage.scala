@@ -35,22 +35,21 @@ object CdcImage {
     val b = batch.withColumn("_kb", kb).localCheckpoint(true)
     val touched = b.select(col("_kb")).distinct()
       .collect().map(_.getInt(0)).toSeq // <= nBuckets ints: driver-safe
+    // first batch decided from the listing, never exception-guessed: a
+    // catch-all would read a storage or footer error as "no image yet",
+    // and the overwrite below would then replace every touched bucket
+    // with this batch's rows alone, silently dropping the history
     val existing =
-      try spark.read.parquet(imageDir).where(col("_kb").isin(touched: _*))
-      catch { case _: Exception => b.limit(0) } // first batch: no image yet
+      if (Ledger.partitions(spark, imageDir, "_kb").isEmpty) b.limit(0)
+      else spark.read.parquet(imageDir).where(col("_kb").isin(touched: _*))
     // latestVersions (NOT latestImage): tombstones are stored so a bucket
     // emptied by deletes still appears in the output — dynamic overwrite
     // only rewrites partitions PRESENT in the new data, so a rowless
     // bucket would otherwise keep its stale files (found by CdcImageSpec)
     val merged = Cdc.latestVersions(existing.unionByName(b), keyCols, versionCols)
       .localCheckpoint(true) // materialize BEFORE overwriting source files
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_kb").parquet(imageDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_kb").parquet(imageDir)
   }
 
   /** Start the resident image-maintenance query. */

@@ -45,12 +45,17 @@ object Fanout {
     Enrich.enrich(Parse.cdcEvents(rawJson), dim)
 
   /** One micro-batch's fan-out; also the unit the replay test drives
-    * directly. Mirrors app.py:55-108 minus the anti-patterns. */
+    * directly. Mirrors app.py:55-108 minus the anti-patterns. Each sink's
+    * jobs carry the job description `fanout: parquet` / `fanout:
+    * leaderboard` / `fanout: http`. */
   def processBatch(batch: DataFrame, cfg: Config): Unit = {
     if (batch.isEmpty) return // A3 empty-batch guard (app.py:56-57)
+    val spark = batch.sparkSession
     batch.persist()
     try {
-      cfg.analyticsDir.foreach(dir => ParquetSink.write(batch, dir))
+      cfg.analyticsDir.foreach { dir =>
+        JobLabel(spark, "fanout: parquet")(ParquetSink.write(batch, dir))
+      }
       cfg.leaderboard.foreach { lb =>
         // pre-aggregated (one row per touched key — Redis' write-set), then
         // pushed from EXECUTORS: each partition connects to the store and
@@ -59,15 +64,19 @@ object Fanout {
         // guarantees a key lives in exactly one partition, so concurrent
         // partition writers never race on the same key's read-modify-write.
         val handle = lb.handle
-        batch
-          .groupBy(col(cfg.leaderboardKey).cast("string").as("k"))
-          .agg(count(lit(1)).as("cnt"))
-          .foreachPartition { (rows: Iterator[Row]) =>
-            val deltas = rows.map(r => r.getString(0) -> r.getLong(1)).toSeq
-            if (deltas.nonEmpty) TtlLeaderboard.connect(handle).increment(deltas)
-          }
+        JobLabel(spark, "fanout: leaderboard") {
+          batch
+            .groupBy(col(cfg.leaderboardKey).cast("string").as("k"))
+            .agg(count(lit(1)).as("cnt"))
+            .foreachPartition { (rows: Iterator[Row]) =>
+              val deltas = rows.map(r => r.getString(0) -> r.getLong(1)).toSeq
+              if (deltas.nonEmpty) TtlLeaderboard.connect(handle).increment(deltas)
+            }
+        }
       }
-      cfg.http.foreach(h => HttpSink.postBatch(batch, h))
+      cfg.http.foreach { h =>
+        JobLabel(spark, "fanout: http")(HttpSink.postBatch(batch, h))
+      }
     } finally { batch.unpersist(); () }
   }
 

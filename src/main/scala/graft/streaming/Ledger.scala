@@ -3,7 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Compaction for `_batch`-partitioned streaming ledgers (StreamGk /
+/** The `_batch` ledger discipline: every resident output lands through
+  * [[write]] (one partition per micro-batch, replay-safe) and plain
+  * outputs read back through [[read]].
+  *
+  * Compaction for `_batch`-partitioned streaming ledgers (StreamGk /
   * StreamKmv / StreamDrift). The ledgers are bounded per BATCH but not
   * in batch COUNT: at a 5 s trigger a resident monitor lands ~17k
   * partitions a day, and every read folds all of them. Compaction
@@ -33,18 +37,44 @@ import org.apache.spark.sql.functions._
   */
 object Ledger {
 
-  /** Partition labels present under `dir`, from directory names alone —
-    * no data read. Empty when the directory does not exist. */
-  private[streaming] def labels(spark: SparkSession, dir: String): Seq[Long] = {
+  /** Land `rows` (WITHOUT a `_batch` column) as partition
+    * `_batch=label` of `dir` — the one `_batch` writer. Dynamic
+    * partition overwrite, so a replayed batch rewrites its own
+    * partition and no other. The overwrite mode rides the write as an
+    * option, never the session conf: residents sharing a session would
+    * race on a conf set around each write. */
+  def write(rows: DataFrame, label: Long, dir: String): Unit =
+    rows.withColumn("_batch", lit(label)).write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_batch")
+      .parquet(dir)
+
+  /** Every row of a `_batch` ledger, internal batch column dropped — the
+    * one reader for outputs that are never compacted (corpus,
+    * quarantine, admitted stores). */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(dir).drop("_batch")
+
+  /** Values of partition column `key` present under `dir`, from
+    * directory names alone — no data read. Empty when the directory does
+    * not exist (or a first write crashed: dynamic overwrite moves
+    * partition directories in only at job commit). */
+  private[streaming] def partitions(spark: SparkSession, dir: String,
+                                    key: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return Seq.empty
     fs.listStatus(path).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.getName)
-      .filter(_.startsWith("_batch="))
-      .map(_.stripPrefix("_batch=").toLong)
+      .filter(_.startsWith(s"$key="))
+      .map(_.stripPrefix(s"$key="))
   }
+
+  /** The `_batch` labels present under `dir`. */
+  private[streaming] def labels(spark: SparkSession, dir: String): Seq[Long] =
+    partitions(spark, dir, "_batch").map(_.toLong)
 
   /** The compaction watermark: batches ≤ this are folded into the
     * newest compacted partition. 0 when never compacted. */
@@ -82,9 +112,8 @@ object Ledger {
     require(upTo >= 1, s"nothing to compact at upTo=$upTo")
     val compacted = rows
       .repartition(numFiles)
-      .withColumn("_batch", lit(-upTo))
       .localCheckpoint(true) // materialize before overwriting source dirs
-    StreamMediaDedup.writeDynamic(compacted, dir)
+    write(compacted, -upTo, dir)
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     labels(spark, dir)

@@ -31,18 +31,17 @@ object Scd2Image {
     val b = batch.withColumn("_kb", kb).localCheckpoint(true)
     val touched = b.select(col("_kb")).distinct()
       .collect().map(_.getInt(0)).toSeq // <= nBuckets ints: driver-safe
+    // first batch from the listing, never exception-guessed (the
+    // [[CdcImage]] rule: a swallowed read error would overwrite the
+    // touched buckets' history with this batch alone)
     val existing =
-      try spark.read.parquet(historyDir).where(col("_kb").isin(touched: _*))
-      catch { case _: Exception => Cdc.scd2(b.limit(0), keyCols, seqCol) }
+      if (Ledger.partitions(spark, historyDir, "_kb").isEmpty)
+        Cdc.scd2(b.limit(0), keyCols, seqCol)
+      else spark.read.parquet(historyDir).where(col("_kb").isin(touched: _*))
     val merged = Cdc.scd2Merge(existing, b, keyCols, seqCol)
       .localCheckpoint(true) // materialize BEFORE overwriting source files
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_kb").parquet(historyDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_kb").parquet(historyDir)
   }
 
   /** Start the resident history-maintenance query. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Chat
@@ -28,38 +28,28 @@ object StreamChat {
   /** One micro-batch: validate, split, land both sides. */
   def gateBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                 quarantineDir: String, idCol: String = "doc_id",
-                turnsCol: String = "turns"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read three times below
-    val verdicts = Chat.validate(b, idCol, turnsCol)
-      .localCheckpoint(true)
-    val okIds = verdicts.where(col("ok")).select(col(idCol))
-    val admitted = Chat.flatten(b.join(okIds, Seq(idCol)), idCol, turnsCol)
-    StreamMediaDedup.writeDynamic(
-      admitted.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      verdicts.where(!col("ok")).withColumn("_batch", lit(batchId)),
-      quarantineDir)
-  }
+                turnsCol: String = "turns"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val verdicts = Chat.validate(b, idCol, turnsCol)
+        .localCheckpoint(true)
+      val okIds = verdicts.where(col("ok")).select(col(idCol))
+      (Chat.flatten(b.join(okIds, Seq(idCol)), idCol, turnsCol),
+        verdicts.where(!col("ok")))
+    }
 
   /** Start the resident gate over a streaming transcript frame
     * (idCol, turnsCol: array<struct<role, content>>). */
   def start(conv: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             turnsCol: String = "turns"): StreamingQuery =
-    conv.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, corpusDir, quarantineDir, idCol, turnsCol)
-      }
-      .start()
+    Gate.start(conv, checkpointDir)(
+      gateBatch(_, _, corpusDir, quarantineDir, idCol, turnsCol))
 
   /** The admitted, rendered corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine report: failed transcripts with contract flags. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

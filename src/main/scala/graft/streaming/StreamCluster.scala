@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Similarity
@@ -25,22 +25,19 @@ object StreamCluster {
 
   /** One micro-batch against a LOADED index (the resident path — the
     * index is immutable while the query runs, so it is read once in
-    * [[start]], never per batch). */
+    * [[start]], never per batch). The assignment is NOT pinned: it is a
+    * zero-shuffle scan of the already-pinned batch against broadcast
+    * centroids, so each side re-deriving it costs less than one more
+    * checkpoint job per batch. */
   def gateBatchWith(batch: DataFrame, batchId: Long,
                     idx: Similarity.KmeansIndex, corpusDir: String,
                     quarantineDir: String, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    if (batch.isEmpty) return
-    val assigned = Similarity
-      .assignAgainstIndex(batch, idx, idCol, vecCol)
-      .localCheckpoint(true) // read twice below
-    StreamMediaDedup.writeDynamic(
-      assigned.where(!col("outlier")).drop("outlier")
-        .withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      assigned.where(col("outlier")).drop("outlier")
-        .withColumn("_batch", lit(batchId)), quarantineDir)
-  }
+                    vecCol: String = "embedding"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val assigned = Similarity.assignAgainstIndex(b, idx, idCol, vecCol)
+      (assigned.where(!col("outlier")).drop("outlier"),
+        assigned.where(col("outlier")).drop("outlier"))
+    }
 
   /** One-shot form for batch/replay callers: loads the index first. */
   def gateBatch(batch: DataFrame, batchId: Long, indexPath: String,
@@ -58,21 +55,15 @@ object StreamCluster {
             idCol: String = "vec_id",
             vecCol: String = "embedding"): StreamingQuery = {
     val idx = Similarity.loadKmeansIndex(vecs.sparkSession, indexPath)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatchWith(batch, batchId, idx, corpusDir, quarantineDir,
-          idCol, vecCol)
-      }
-      .start()
+    Gate.start(vecs, checkpointDir)(
+      gateBatchWith(_, _, idx, corpusDir, quarantineDir, idCol, vecCol))
   }
 
   /** Admitted vectors with their cluster coordinates. */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The outlier quarantine. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

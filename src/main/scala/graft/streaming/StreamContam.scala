@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Similarity
@@ -38,18 +38,13 @@ object StreamContam {
   def gateBatch(batch: DataFrame, batchId: Long, bench: DataFrame,
                 corpusDir: String, quarantineDir: String,
                 minCos: Double = 0.6, idCol: String = "vec_id",
-                vecCol: String = "embedding"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read twice below
-    val hits = Similarity.semanticContamination(b, bench, minCos,
-      idCol, vecCol).localCheckpoint(true)
-    val clean = b.join(hits.select(col("nid").as(idCol)), Seq(idCol),
-      "left_anti")
-    StreamMediaDedup.writeDynamic(
-      clean.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      hits.withColumn("_batch", lit(batchId)), quarantineDir)
-  }
+                vecCol: String = "embedding"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val hits = Similarity.semanticContamination(b, bench, minCos,
+        idCol, vecCol).localCheckpoint(true)
+      (b.join(hits.select(col("nid").as(idCol)), Seq(idCol), "left_anti"),
+        hits)
+    }
 
   /** Start the resident gate over a streaming vector frame (idCol,
     * vecCol: array<float>). */
@@ -57,20 +52,14 @@ object StreamContam {
             quarantineDir: String, checkpointDir: String,
             minCos: Double = 0.6, idCol: String = "vec_id",
             vecCol: String = "embedding"): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, bench, corpusDir, quarantineDir,
-          minCos, idCol, vecCol)
-      }
-      .start()
+    Gate.start(vectors, checkpointDir)(gateBatch(_, _, bench, corpusDir,
+      quarantineDir, minCos, idCol, vecCol))
 
   /** The admitted clean vectors (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine drop list: (nid, n_probes_hit, max_cos3). */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Pipeline
@@ -42,21 +42,15 @@ object StreamContamSweep {
                 minScoreFx: Long, minCos: Double = 0.6,
                 n: Int = 5, minOverlapPct: Long = 20L,
                 idCol: String = "doc_id", textCol: String = "text",
-                vecCol: String = "embedding"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read twice below
-    val v = Pipeline.contaminationGate(b, bench, benchVecs, frozen,
-      minScoreFx, n, minOverlapPct, minCos,
-      idCol = idCol, textCol = textCol, vecCol = vecCol)
-      .localCheckpoint(true)
-    val clean = b.join(v.where(col("kept")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    StreamMediaDedup.writeDynamic(
-      clean.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      v.where(!col("kept")).withColumn("_batch", lit(batchId)),
-      quarantineDir)
-  }
+                vecCol: String = "embedding"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val v = Pipeline.contaminationGate(b, bench, benchVecs, frozen,
+        minScoreFx, n, minOverlapPct, minCos,
+        idCol = idCol, textCol = textCol, vecCol = vecCol)
+        .localCheckpoint(true)
+      (b.join(v.where(col("kept")).select(col(idCol)), Seq(idCol), "left_semi"),
+        v.where(!col("kept")))
+    }
 
   /** Start the resident gate over a streaming (idCol, textCol, vecCol)
     * document frame. */
@@ -66,22 +60,16 @@ object StreamContamSweep {
             minCos: Double = 0.6, n: Int = 5, minOverlapPct: Long = 20L,
             idCol: String = "doc_id", textCol: String = "text",
             vecCol: String = "embedding"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, bench, benchVecs, frozen, corpusDir,
-          quarantineDir, minScoreFx, minCos, n, minOverlapPct,
-          idCol, textCol, vecCol)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(gateBatch(_, _, bench, benchVecs, frozen,
+      corpusDir, quarantineDir, minScoreFx, minCos, n, minOverlapPct,
+      idCol, textCol, vecCol))
 
   /** The admitted clean documents (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine list: the gate's verdict columns for every
     * non-clean doc. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

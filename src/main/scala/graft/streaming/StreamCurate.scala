@@ -76,5 +76,5 @@ object StreamCurate {
 
   /** Read the curated stream (internal batch column dropped). */
   def curated(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir).drop("_batch")
+    Ledger.read(spark, outDir)
 }

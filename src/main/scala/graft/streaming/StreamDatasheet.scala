@@ -54,13 +54,11 @@ object StreamDatasheet {
     if (batch.isEmpty) return
     val b = base(batch, sourceCol, langCol, idCol, textCol)
       .localCheckpoint(true) // two rollups below
-    StreamMediaDedup.writeDynamic(
-      b.groupBy(col("source"), col("_lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars"))
-        .withColumn("_batch", lit(batchId)), volDir)
-    StreamMediaDedup.writeDynamic(
-      b.groupBy(col("source"), col("_h")).agg(count(lit(1)).as("cnt"))
-        .withColumn("_batch", lit(batchId)), hashDir)
+    Ledger.write(b.groupBy(col("source"), col("_lang"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("_nc")).as("n_chars")),
+      batchId, volDir)
+    Ledger.write(b.groupBy(col("source"), col("_h")).agg(count(lit(1)).as("cnt")),
+      batchId, hashDir)
   }
 
   /** Start the resident census. `compactEvery` > 0 folds both ledgers

@@ -67,22 +67,10 @@ object StreamDomainCap {
       .where(col("rk") <= lit(k.toLong) - coalesce(col("_prior"), lit(0L)))
       .drop("rk", "_prior")
       .localCheckpoint(true) // materialize before touching output dirs
-    writeDynamic(survivors.withColumn("_batch", lit(batchId)), outDir)
-    writeDynamic(
-      survivors.groupBy(col(domainCol)).agg(count(lit(1)).as("admitted"))
-        .withColumn("_batch", lit(batchId)),
-      ledgerDir)
-  }
-
-  private def writeDynamic(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy("_batch").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Ledger.write(survivors, batchId, outDir)
+    Ledger.write(
+      survivors.groupBy(col(domainCol)).agg(count(lit(1)).as("admitted")),
+      batchId, ledgerDir)
   }
 
   /** Start the resident admission gate over a streaming doc frame.
@@ -119,5 +107,5 @@ object StreamDomainCap {
 
   /** Read the admitted stream (internal batch column dropped). */
   def admitted(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir).drop("_batch")
+    Ledger.read(spark, outDir)
 }

@@ -58,8 +58,7 @@ object StreamDrift {
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("x"))
     val counts = Quality.bucketCounts(base, edges)
-    StreamMediaDedup.writeDynamic(
-      counts.withColumn("_batch", lit(batchId)), ledgerDir)
+    Ledger.write(counts, batchId, ledgerDir)
   }
 
   /** Start the resident monitor over a streaming frame. `compactEvery`

@@ -39,8 +39,7 @@ object StreamGk {
       .agg(new Gk.GkSummaryAgg(eps).toColumn.name("t"))
       .flatMap(_._2)
       .toDF("tuple_idx", "v", "g", "d")
-    StreamMediaDedup.writeDynamic(
-      rows.withColumn("_batch", lit(batchId)), ledgerDir)
+    Ledger.write(rows, batchId, ledgerDir)
   }
 
   /** Start the resident tracker over a streaming frame.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Pipeline
@@ -37,19 +37,13 @@ object StreamGovernance {
                     idCol: String = "doc_id", urlCol: String = "url",
                     textCol: String = "text",
                     robotsRules: Option[DataFrame] = None,
-                    bot: String = "graftbot"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // verdict + both splits below
-    val verdict = Pipeline.governanceSweep(b, registry, minFreMilli,
-      idCol, urlCol, textCol, robotsRules, bot).localCheckpoint(true)
-    val joined = b.join(verdict, Seq(idCol))
-    StreamMediaDedup.writeDynamic(
-      joined.where(col("kept")).withColumn("_batch", lit(batchId)),
-      corpusDir)
-    StreamMediaDedup.writeDynamic(
-      joined.where(!col("kept")).withColumn("_batch", lit(batchId)),
-      quarantineDir)
-  }
+                    bot: String = "graftbot"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val verdict = Pipeline.governanceSweep(b, registry, minFreMilli,
+        idCol, urlCol, textCol, robotsRules, bot).localCheckpoint(true)
+      val joined = b.join(verdict, Seq(idCol))
+      (joined.where(col("kept")), joined.where(!col("kept")))
+    }
 
   /** Start the resident sweep over a streaming crawl frame.
     * `registryDir` is a parquet store with a `domain` column;
@@ -66,21 +60,15 @@ object StreamGovernance {
       .select(col("domain")).localCheckpoint(true)
     val robots = robotsDir.map(d => graft.ops.Web.robotsRules(
       docs.sparkSession.read.parquet(d)).localCheckpoint(true))
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatchWith(batch, batchId, registry, corpusDir, quarantineDir,
-          minFreMilli, idCol, urlCol, textCol, robots, bot)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(gateBatchWith(_, _, registry, corpusDir,
+      quarantineDir, minFreMilli, idCol, urlCol, textCol, robots, bot))
   }
 
   /** The admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine: reason-coded rejects with every gate's evidence. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

@@ -29,8 +29,7 @@ object StreamKmv {
                   k: Int, sketchDir: String): Unit = {
     if (batch.isEmpty) return
     val sk = Kmv.sketch(batch, colName, k)
-    StreamMediaDedup.writeDynamic(
-      sk.withColumn("_batch", lit(batchId)), sketchDir)
+    Ledger.write(sk, batchId, sketchDir)
   }
 
   /** Start the resident tracker over a streaming frame. `compactEvery`

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Quality
@@ -29,38 +29,28 @@ object StreamLicense {
   /** One micro-batch: census, split by verdict, land both sides. */
   def gateBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                 quarantineDir: String, idCol: String = "doc_id",
-                textCol: String = "text"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read twice below
-    val census = Quality.licenseCensus(b, idCol, textCol)
-      .localCheckpoint(true) // feeds both splits
-    val withCensus = b.join(census, Seq(idCol))
-    StreamMediaDedup.writeDynamic(
-      withCensus.where(col("license_class") === "permissive")
-        .withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      withCensus.where(col("license_class") =!= "permissive")
-        .withColumn("_batch", lit(batchId)), quarantineDir)
-  }
+                textCol: String = "text"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val census = Quality.licenseCensus(b, idCol, textCol)
+        .localCheckpoint(true) // feeds both splits
+      val withCensus = b.join(census, Seq(idCol))
+      (withCensus.where(col("license_class") === "permissive"),
+        withCensus.where(col("license_class") =!= "permissive"))
+    }
 
   /** Start the resident gate over a streaming document frame. */
   def start(docs: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, corpusDir, quarantineDir, idCol, textCol)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(
+      gateBatch(_, _, corpusDir, quarantineDir, idCol, textCol))
 
   /** The admitted, permissively-licensed corpus. */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine: copyleft/unlicensed docs with their census
     * columns. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

@@ -64,27 +64,11 @@ private[streaming] object StreamMediaDedup {
     val dropIds = hits.select(col("new_id").as("asset_id")).distinct()
     val survivors = local.join(dropIds, Seq("asset_id"), "left_anti")
       .localCheckpoint(true) // materialize before touching output dirs
-    writeDynamic(survivors.withColumn("_batch", lit(batchId)), corpusDir)
-    writeDynamic(
+    Ledger.write(survivors, batchId, corpusDir)
+    Ledger.write(
       survivors.select(col("asset_id"), sigOf(col("media")).as("sig"))
-        .where(col("sig").isNotNull)
-        .withColumn("_batch", lit(batchId)),
-      indexDir)
-  }
-
-  /** `_batch`-partitioned dynamic-overwrite append — shared with
-    * [[StreamVideoDedup]] (whose set-similarity index cannot ride the
-    * 64-bit-signature engine above, but follows the same ledger/replay
-    * discipline). */
-  private[streaming] def writeDynamic(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy("_batch").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+        .where(col("sig").isNotNull),
+      batchId, indexDir)
   }
 
   /** Start the resident filter over a streaming (asset_id, media) frame. */
@@ -103,5 +87,5 @@ private[streaming] object StreamMediaDedup {
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 }

@@ -59,22 +59,9 @@ object StreamNearDedup {
     val dropIds = hits.select(col("new_id").as("doc_id")).distinct()
     val survivors = local.join(dropIds, Seq("doc_id"), "left_anti")
       .localCheckpoint(true) // materialize before touching output dirs
-    writeDynamic(survivors.withColumn("_batch", lit(batchId)), corpusDir)
-    writeDynamic(
-      Dedup.minhashIndex(survivors, bands, rowsPerBand, n)
-        .withColumn("_batch", lit(batchId)),
-      indexDir)
-  }
-
-  private def writeDynamic(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy("_batch").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Ledger.write(survivors, batchId, corpusDir)
+    Ledger.write(Dedup.minhashIndex(survivors, bands, rowsPerBand, n),
+      batchId, indexDir)
   }
 
   /** Start the resident filter over a streaming (doc_id, text) frame. */
@@ -93,7 +80,7 @@ object StreamNearDedup {
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** Compact the index's per-batch partitions: batches 0..upTo rewrite
     * into ONE partition labeled `_batch=0`, then the stale directories
@@ -116,18 +103,12 @@ object StreamNearDedup {
     val compacted = spark.read.parquet(indexDir)
       .where(col("_batch") <= upTo).drop("_batch")
       .repartition(numFiles)
-      .withColumn("_batch", lit(0L))
       .localCheckpoint(true) // materialize BEFORE overwriting source files
-    writeDynamic(compacted, indexDir)
+    Ledger.write(compacted, 0L, indexDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .filter(_.isDirectory).map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("_batch=") &&
-          p.getName.stripPrefix("_batch=").toLong > 0 &&
-          p.getName.stripPrefix("_batch=").toLong <= upTo
-      }
-      .foreach(p => fs.delete(p, true))
+    Ledger.labels(spark, indexDir).filter(l => l > 0 && l <= upTo)
+      .foreach(l => fs.delete(
+        new org.apache.hadoop.fs.Path(indexDir, s"_batch=$l"), true))
   }
 }

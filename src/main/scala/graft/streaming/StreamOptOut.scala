@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Web
@@ -33,19 +33,14 @@ object StreamOptOut {
   def gateBatchWith(batch: DataFrame, batchId: Long, registry: DataFrame,
                     corpusDir: String, droppedDir: String,
                     urlCol: String = "url",
-                    idCol: String = "doc_id"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // verdict + both splits below
-    val verdict = Web.domainOptOut(b, registry, urlCol, idCol)
-      .localCheckpoint(true)
-    StreamMediaDedup.writeDynamic(
-      b.join(verdict.where(col("kept")).select(col(idCol)), Seq(idCol))
-        .withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      b.join(verdict.where(!col("kept"))
-          .select(col(idCol), col("host"), col("optout_domain")), Seq(idCol))
-        .withColumn("_batch", lit(batchId)), droppedDir)
-  }
+                    idCol: String = "doc_id"): Unit =
+    Gate.batch(batch, batchId, corpusDir, droppedDir) { b =>
+      val verdict = Web.domainOptOut(b, registry, urlCol, idCol)
+        .localCheckpoint(true)
+      (b.join(verdict.where(col("kept")).select(col(idCol)), Seq(idCol)),
+        b.join(verdict.where(!col("kept"))
+          .select(col(idCol), col("host"), col("optout_domain")), Seq(idCol)))
+    }
 
   /** Start the resident gate over a streaming crawl frame. `registryDir`
     * is a parquet store with a `domain` column; it loads ONCE here. */
@@ -54,23 +49,17 @@ object StreamOptOut {
             urlCol: String = "url", idCol: String = "doc_id"): StreamingQuery = {
     val registry = docs.sparkSession.read.parquet(registryDir)
       .select(col("domain")).localCheckpoint(true)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatchWith(batch, batchId, registry, corpusDir, droppedDir,
-          urlCol, idCol)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(
+      gateBatchWith(_, _, registry, corpusDir, droppedDir, urlCol, idCol))
   }
 
   /** The admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The dropped store: governed docs with host + matched domain. */
   def dropped(spark: SparkSession, droppedDir: String): DataFrame =
-    spark.read.parquet(droppedDir).drop("_batch")
+    Ledger.read(spark, droppedDir)
 
   /** The registry-side audit over the lifetime dropped store (the q217
     * shape — zero-hit entries surface). */

@@ -27,9 +27,8 @@ object StreamOutlinks {
                    idCol: String = "doc_id", urlCol: String = "url",
                    htmlCol: String = "html"): Unit = {
     if (batch.isEmpty) return
-    StreamMediaDedup.writeDynamic(
-      LinkGraph.outlinks(batch, idCol, urlCol, htmlCol)
-        .withColumn("_batch", lit(batchId)), linksDir)
+    Ledger.write(LinkGraph.outlinks(batch, idCol, urlCol, htmlCol), batchId,
+      linksDir)
   }
 
   /** Start the resident harvester over a streaming page frame. */
@@ -46,7 +45,7 @@ object StreamOutlinks {
 
   /** The accumulated edge ledger (any prefix is a valid graph). */
   def links(spark: SparkSession, linksDir: String): DataFrame =
-    spark.read.parquet(linksDir).drop("_batch")
+    Ledger.read(spark, linksDir)
 
   /** Fold the ledger to the current host-quality prior. */
   def hostRank(spark: SparkSession, linksDir: String,

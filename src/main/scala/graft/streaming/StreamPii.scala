@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Curate
@@ -32,47 +32,38 @@ object StreamPii {
   /** One micro-batch: audit, split, land both sides. */
   def gateBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                 quarantineDir: String, idCol: String = "doc_id",
-                textCol: String = "text"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read three times below
-    val flagged = Curate.luhnAudit(b, idCol, textCol)
-      .where(col("luhn_valid"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_valid_cards"),
-        array_sort(collect_list(col("masked"))).as("masked_cards"))
-      .localCheckpoint(true) // feeds the quarantine AND the anti-join
-    // quarantine gets the FULL scrub too (card runs -> [CARD] plus the
-    // email/phone redaction): the quarantine table is long-lived and
-    // must not be the one place unredacted pattern-PII survives
-    val quarantined = Curate.redactPii(b.join(flagged, Seq(idCol))
-      .withColumn(textCol,
-        regexp_replace(col(textCol), Curate.cardRunPattern, "[CARD]")),
-      textCol)
-    val clean = Curate.redactPii(
-      b.join(flagged.select(col(idCol)), Seq(idCol), "left_anti"), textCol)
-    StreamMediaDedup.writeDynamic(
-      clean.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      quarantined.withColumn("_batch", lit(batchId)), quarantineDir)
-  }
+                textCol: String = "text"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val flagged = Curate.luhnAudit(b, idCol, textCol)
+        .where(col("luhn_valid"))
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_valid_cards"),
+          array_sort(collect_list(col("masked"))).as("masked_cards"))
+        .localCheckpoint(true) // feeds the quarantine AND the anti-join
+      // quarantine gets the FULL scrub too (card runs -> [CARD] plus the
+      // email/phone redaction): the quarantine table is long-lived and
+      // must not be the one place unredacted pattern-PII survives
+      val quarantined = Curate.redactPii(b.join(flagged, Seq(idCol))
+        .withColumn(textCol,
+          regexp_replace(col(textCol), Curate.cardRunPattern, "[CARD]")),
+        textCol)
+      val clean = Curate.redactPii(
+        b.join(flagged.select(col(idCol)), Seq(idCol), "left_anti"), textCol)
+      (clean, quarantined)
+    }
 
   /** Start the resident gate over a streaming document frame. */
   def start(docs: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, corpusDir, quarantineDir, idCol, textCol)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(
+      gateBatch(_, _, corpusDir, quarantineDir, idCol, textCol))
 
   /** The admitted, scrubbed corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine: card-bearing docs with counts and last-4 masks. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

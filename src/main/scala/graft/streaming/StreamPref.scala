@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Chat
@@ -30,19 +30,13 @@ object StreamPref {
   def gateBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                 quarantineDir: String, idCol: String = "pair_id",
                 chosenCol: String = "chosen",
-                rejectedCol: String = "rejected"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read three times below
-    val verdicts = Chat.preferencePairs(b, idCol, chosenCol, rejectedCol)
-      .localCheckpoint(true)
-    val okIds = verdicts.where(col("ok")).select(col(idCol))
-    val admitted = b.join(okIds, Seq(idCol))
-    StreamMediaDedup.writeDynamic(
-      admitted.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      verdicts.where(!col("ok")).withColumn("_batch", lit(batchId)),
-      quarantineDir)
-  }
+                rejectedCol: String = "rejected"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val verdicts = Chat.preferencePairs(b, idCol, chosenCol, rejectedCol)
+        .localCheckpoint(true)
+      (b.join(verdicts.where(col("ok")).select(col(idCol)), Seq(idCol)),
+        verdicts.where(!col("ok")))
+    }
 
   /** Start the resident gate over a streaming pair frame (idCol,
     * chosenCol, rejectedCol: array<struct<role, content>>). */
@@ -50,20 +44,14 @@ object StreamPref {
             checkpointDir: String, idCol: String = "pair_id",
             chosenCol: String = "chosen",
             rejectedCol: String = "rejected"): StreamingQuery =
-    pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, corpusDir, quarantineDir, idCol,
-          chosenCol, rejectedCol)
-      }
-      .start()
+    Gate.start(pairs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
+      idCol, chosenCol, rejectedCol))
 
   /** The admitted pair corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine report: failed pairs with contract flags. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Quality
@@ -29,40 +29,29 @@ object StreamReadability {
   def gateBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                 quarantineDir: String, minMilli: Long = 30000L,
                 idCol: String = "doc_id",
-                textCol: String = "text"): Unit = {
-    if (batch.isEmpty) return
-    val b = batch.localCheckpoint(true) // read twice below
-    val scored = Quality.readability(b, idCol, textCol)
-      .localCheckpoint(true) // feeds both splits
-    val withScore = b.join(scored, Seq(idCol))
-    val keep = col("fre_milli").isNotNull && col("fre_milli") >= minMilli
-    StreamMediaDedup.writeDynamic(
-      withScore.where(keep).withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
-      withScore.where(!coalesce(keep, lit(false)))
-        .withColumn("_batch", lit(batchId)), quarantineDir)
-  }
+                textCol: String = "text"): Unit =
+    Gate.batch(batch, batchId, corpusDir, quarantineDir) { b =>
+      val scored = Quality.readability(b, idCol, textCol)
+        .localCheckpoint(true) // feeds both splits
+      val withScore = b.join(scored, Seq(idCol))
+      val keep = col("fre_milli").isNotNull && col("fre_milli") >= minMilli
+      (withScore.where(keep), withScore.where(!coalesce(keep, lit(false))))
+    }
 
   /** Start the resident gate over a streaming document frame. */
   def start(docs: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, minMilli: Long = 30000L,
             idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        gateBatch(batch, batchId, corpusDir, quarantineDir, minMilli,
-          idCol, textCol)
-      }
-      .start()
+    Gate.start(docs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
+      minMilli, idCol, textCol))
 
   /** The admitted, readable corpus. */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 
   /** The quarantine: below-cut and unmeasurable docs with their metric
     * columns. */
   def quarantine(spark: SparkSession, quarantineDir: String): DataFrame =
-    spark.read.parquet(quarantineDir).drop("_batch")
+    Ledger.read(spark, quarantineDir)
 }

@@ -68,15 +68,13 @@ object StreamVideoDedup {
     val dropIds = hits.select(col("new_id").as("asset_id")).distinct()
     val survivors = local.join(dropIds, Seq("asset_id"), "left_anti")
       .localCheckpoint(true) // materialize before touching output dirs
-    StreamMediaDedup.writeDynamic(
-      survivors.withColumn("_batch", lit(batchId)), corpusDir)
-    StreamMediaDedup.writeDynamic(
+    Ledger.write(survivors, batchId, corpusDir)
+    Ledger.write(
       sigs.join(dropIds.withColumnRenamed("asset_id", "video_id"),
           Seq("video_id"), "left_anti")
         .select(col("video_id"), size(col("sh")).as("sz"),
-          explode(col("sh")).as("s"))
-        .withColumn("_batch", lit(batchId)),
-      indexDir)
+          explode(col("sh")).as("s")),
+      batchId, indexDir)
   }
 
   /** Start the resident filter over a streaming (asset_id, media) frame. */
@@ -93,5 +91,5 @@ object StreamVideoDedup {
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
-    spark.read.parquet(corpusDir).drop("_batch")
+    Ledger.read(spark, corpusDir)
 }

@@ -102,6 +102,32 @@ class CdcImageSpec extends SparkTestBase {
     assert(k3.length == 1 && k3.head.getAs[Boolean]("is_current"))
   }
 
+  test("first batch is decided from the listing: missing dir merges, unreadable image throws") {
+    import org.apache.spark.sql.functions.lit
+    val changes = Seq((1L, 1L, "c", "a1"), (2L, 1L, "c", "b1"))
+      .toDF("k", "ver", "op", "payload")
+    // a missing directory is the first batch: the image is the batch's
+    val fresh = Files.createTempDirectory("graft-img-first").toString + "/image"
+    CdcImage.mergeBatch(changes, fresh, Seq("k"), Seq("ver"), nBuckets = 1)
+    assert(CdcImage.read(spark, fresh).select("k", "payload")
+      .as[(Long, String)].collect().toSet == Set((1L, "a1"), (2L, "b1")))
+    // an image whose bucket holds only a truncated parquet file must fail
+    // the batch, not read as "no image yet" and overwrite the bucket
+    val broken = Files.createTempDirectory("graft-img-broken").toString
+    val bucket = java.nio.file.Paths.get(broken, "_kb=0")
+    Files.createDirectories(bucket)
+    Files.write(bucket.resolve("part-00000.parquet"), "PAR1trunc".getBytes)
+    intercept[Exception] {
+      CdcImage.mergeBatch(changes, broken, Seq("k"), Seq("ver"), nBuckets = 1)
+    }
+    intercept[Exception] {
+      Scd2Image.mergeBatch(changes.drop("ver").withColumn("seq", lit(1L)),
+        broken, Seq("k"), "seq", nBuckets = 1)
+    }
+    assert(new java.io.File(bucket.toFile, "part-00000.parquet").length() == 9,
+      "the unreadable bucket is left as it was")
+  }
+
   test("streamed image == batch latestImage over the full change log") {
     implicit val ctx = spark.sqlContext
     val imageDir = Files.createTempDirectory("graft-img").toString + "/image"

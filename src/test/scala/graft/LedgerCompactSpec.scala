@@ -23,6 +23,19 @@ class LedgerCompactSpec extends SparkTestBase {
 
   private val eps = 0.01
 
+  test("Ledger.write: per-write dynamic overwrite, session conf untouched") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val dir = Files.createTempDirectory("lcw").toString + "/led"
+    Ledger.write(Seq(1L, 2L).toDF("x"), 0L, dir)
+    Ledger.write(Seq(3L).toDF("x"), 1L, dir)
+    Ledger.write(Seq(4L).toDF("x"), 1L, dir) // a replay of batch 1
+    assert(labels(dir) == Set(0L, 1L))
+    assert(Ledger.read(spark, dir).as[Long].collect().toSet == Set(1L, 2L, 4L),
+      "the replay rewrote its own partition and left batch 0 alone")
+    assert(spark.conf.getOption(key) == before)
+  }
+
   test("GK: compaction preserves lifetime quantiles exactly; ledger bounded") {
     val dir = Files.createTempDirectory("lcg").toString + "/led"
     StreamGk.summaryBatch((1 to 4000).map(i => ((i * i) % 997).toDouble).toDF("x"),

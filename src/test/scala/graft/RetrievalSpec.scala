@@ -140,6 +140,24 @@ class RetrievalSpec extends SparkTestBase {
       s"query-term filter must broadcast, not shuffle the postings:\n${nodes.mkString(", ")}")
   }
 
+  test("bm25Search keeps a postings cache the caller owns") {
+    import org.apache.spark.storage.StorageLevel
+    val q = Seq(1L -> "apple").toDF("query_id", "text")
+    val post = Retrieval.bm25Postings(corpus).persist()
+    val first =
+      try {
+        val hits = Retrieval.bm25Search(post, q).collect().toSet
+        assert(post.storageLevel != StorageLevel.NONE,
+          "search must not evict the caller's cache")
+        assert(Retrieval.bm25Search(post, q).collect().toSet == hits)
+        hits
+      } finally { post.unpersist(true); () }
+    // an uncached frame is persisted for the search only, then released
+    val bare = Retrieval.bm25Postings(corpus)
+    assert(Retrieval.bm25Search(bare, q).collect().toSet == first)
+    assert(bare.storageLevel == StorageLevel.NONE)
+  }
+
   test("hardNegatives: positive dropped, re-ranked, above_positive audits false negatives") {
     // corpus: docs about apples; query "apple pie"; the POSITIVE is the
     // weak doc 4 (one term), so the stronger lexical matches 1..3 mine

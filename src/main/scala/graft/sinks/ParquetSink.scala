@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   *     monthly partition pruning readers get for free;
   *   - rows sorted within files by (content_id, event_ts) — min/max
   *     page/row-group skipping on the clustering key, like the MergeTree
-  *     ORDER BY;
+  *     ORDER BY. The sort leads with `event_month`: a partitioned write
+  *     needs its rows ordered by the partition column, and when the plan's
+  *     order does not start with it Spark adds its own `Sort(event_month)`,
+  *     which replaces (not refines) an earlier within-partition sort;
   *   - an append-time `processed_ts` audit column (init.sql:18).
   *
   * Each micro-batch is repartitioned by month before the write so a batch
@@ -25,7 +28,7 @@ object ParquetSink {
       .withColumn("event_month", date_format(col(tsCol), "yyyy-MM"))
       .withColumn("processed_ts", current_timestamp())
       .repartition(col("event_month"))
-      .sortWithinPartitions(col("content_id"), col(tsCol))
+      .sortWithinPartitions(col("event_month"), col("content_id"), col(tsCol))
       .write
       .mode("append")
       .partitionBy("event_month")
@@ -47,7 +50,7 @@ object ParquetSink {
     spark.read.parquet(dir).localCheckpoint()
       .repartition(col("event_month"),
         pmod(xxhash64(col("content_id"), col(tsCol)), lit(filesPerMonth.toLong)))
-      .sortWithinPartitions(col("content_id"), col(tsCol))
+      .sortWithinPartitions(col("event_month"), col("content_id"), col(tsCol))
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -12,9 +12,9 @@ import scala.collection.concurrent.TrieMap
   * README.md:95-97). The exact sliding window lives in
   * graft.streaming.Fanout.slidingCounts as a watermarked windowed agg.
   *
-  * Scale contract: this store receives PRE-AGGREGATED per-batch deltas
-  * (one row per key that appeared in the batch — what Redis receives in
-  * the reference), never raw events. Swap the TrieMap for a Redis client in
+  * Scale contract: this store receives PRE-AGGREGATED deltas (one per key
+  * that appeared in a partition of the batch — what Redis receives in the
+  * reference), never raw events. Swap the TrieMap for a Redis client in
   * production; the interface is sink-shaped on purpose. The injectable
   * clock keeps the TTL behavior deterministic in tests.
   */
@@ -27,12 +27,15 @@ class TtlLeaderboard(ttlMs: Long = 600000L, clock: () => Long = () => System.cur
   private case class Entry(count: Long, expiresAt: Long)
   private val store = TrieMap.empty[String, Entry]
 
-  /** Merge one micro-batch's (key, delta) pairs: INCRBY + EXPIRE. */
+  /** Merge (key, delta) pairs: INCRBY + EXPIRE, atomic per key (as
+    * Redis' INCRBY is), so partitions of one batch may push the same key
+    * concurrently. */
   def increment(deltas: Iterable[(String, Long)]): Unit = {
     val now = clock()
     deltas.foreach { case (k, d) =>
-      val cur = store.get(k).filter(_.expiresAt > now).map(_.count).getOrElse(0L)
-      store.put(k, Entry(cur + d, now + ttlMs))
+      store.updateWith(k) { cur =>
+        Some(Entry(cur.filter(_.expiresAt > now).map(_.count).getOrElse(0L) + d, now + ttlMs))
+      }
     }
   }
 

@@ -18,8 +18,8 @@ import graft.sinks.{HttpSink, ParquetSink, TtlLeaderboard}
   *     recomputed the join 3x per batch (app.py:82,90,102);
   *   - no driver-side collect()/toPandas() anywhere: the parquet sink
   *     writes from executors, HTTP posts run foreachPartition on executors,
-  *     and the leaderboard receives pre-aggregated (key,count) deltas
-  *     pushed per-partition from executors (Redis' write-set, written the
+  *     and the leaderboard receives (key,count) deltas pre-aggregated and
+  *     pushed per partition from executors (Redis' write-set, written the
   *     way a Redis client pool would write it);
   *   - leaderboard updates only the keys touched by the batch, not a full
   *     keyspace SCAN (app.py:96-98).
@@ -57,19 +57,19 @@ object Fanout {
         JobLabel(spark, "fanout: parquet")(ParquetSink.write(batch, dir))
       }
       cfg.leaderboard.foreach { lb =>
-        // pre-aggregated (one row per touched key — Redis' write-set), then
-        // pushed from EXECUTORS: each partition connects to the store and
-        // writes its own slice. No collect — a hot batch touching 10^8 keys
-        // never materializes on the driver (round-2 advice). The groupBy
-        // guarantees a key lives in exactly one partition, so concurrent
-        // partition writers never race on the same key's read-modify-write.
+        // pre-aggregated per partition (one delta per touched key — Redis'
+        // write-set), then pushed from EXECUTORS: each partition connects
+        // to the store and writes its own slice. No collect — a hot batch
+        // touching 10^8 keys never materializes on the driver (round-2
+        // advice) — and no shuffle: two partitions may push the same key,
+        // which is safe because `increment` is atomic per key (as Redis
+        // INCRBY is).
         val handle = lb.handle
         JobLabel(spark, "fanout: leaderboard") {
-          batch
-            .groupBy(col(cfg.leaderboardKey).cast("string").as("k"))
-            .agg(count(lit(1)).as("cnt"))
+          batch.select(col(cfg.leaderboardKey).cast("string"))
             .foreachPartition { (rows: Iterator[Row]) =>
-              val deltas = rows.map(r => r.getString(0) -> r.getLong(1)).toSeq
+              val deltas = scala.collection.mutable.HashMap.empty[String, Long]
+              rows.foreach(r => deltas.updateWith(r.getString(0))(c => Some(c.getOrElse(0L) + 1L)))
               if (deltas.nonEmpty) TtlLeaderboard.connect(handle).increment(deltas)
             }
         }

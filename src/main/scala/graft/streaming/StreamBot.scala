@@ -40,9 +40,12 @@ object StreamBot {
   case class Ev(user_id: Long, ts_us: Long, event_id: Long)
   case class Verdict(user_id: Long, n_gaps: Long, mean_gap_s: Long,
                      mad_ppm: Long, bot_like: Boolean, saturated: Boolean)
-  private case class Last(lastUs: Long, lastId: Long)
-  private case class Totals(nGaps: Long, sumGap: Long, nDistinct: Long,
-                            saturated: Boolean)
+  // state rows stay public: Janino cannot compile generated code that
+  // touches a private class, and Spark then falls back to interpreted
+  // evaluation with a CompileException in the log
+  case class Last(lastUs: Long, lastId: Long)
+  case class Totals(nGaps: Long, sumGap: Long, nDistinct: Long,
+                    saturated: Boolean)
 
   class Processor(minEvents: Long, botMadPpm: Long, maxDistinctGaps: Long)
       extends StatefulProcessor[Long, Ev, Verdict] {

@@ -3,6 +3,7 @@ package graft
 import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -186,6 +187,34 @@ class StreamingSpec extends SparkTestBase {
     val afterRows = spark.read.parquet(s"$tmp/t").drop("processed_ts")
       .collect().map(_.toSeq).toSet
     assert(afterRows == beforeRows, "compaction must not change the data")
+  }
+
+  test("ParquetSink: write and compact leave every part file in (content_id, event_ts) order") {
+    val tmp = Files.createTempDirectory("graft-sorted").toString
+    val rnd = new scala.util.Random(17)
+    val rows = rnd.shuffle((1 to 400).map { i =>
+      (i.toLong, s"c-${rnd.nextInt(9)}",
+        java.sql.Timestamp.valueOf(f"2024-0${1 + i % 2}-${1 + rnd.nextInt(28)}%02d 10:00:00"))
+    })
+    val batch = rows.toDF("event_id", "content_id", "event_ts").repartition(4)
+    def assertSorted(stage: String): Unit = {
+      val files = Files.walk(java.nio.file.Paths.get(s"$tmp/t")).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toList
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val got = spark.read.parquet(f.toString).select("content_id", "event_ts")
+          .as[(String, java.sql.Timestamp)].collect().toSeq
+        val want = got.sortBy { case (c, ts) => (c, ts.getTime) }
+        val firstOff = got.indices.find(i => got(i) != want(i))
+        assert(firstOff.isEmpty, s"$stage: ${f.getFileName} leaves (content_id, event_ts) order at row $firstOff")
+      }
+    }
+    graft.sinks.ParquetSink.write(batch, s"$tmp/t")
+    graft.sinks.ParquetSink.write(batch.withColumn("event_id", $"event_id" + 1000), s"$tmp/t")
+    assertSorted("write")
+    graft.sinks.ParquetSink.compact(spark, s"$tmp/t", filesPerMonth = 2)
+    assertSorted("compact")
+    assert(spark.read.parquet(s"$tmp/t").count() == 800)
   }
 
   test("StreamDedup: redelivered events collapse to one row across micro-batches") {

@@ -49,10 +49,14 @@ object Functions {
       s"$name expects a literal string, got $other")
   }
 
+  /** Registers the `graft_*` names the session's registry lacks. Names it
+    * already holds are left as they are: re-registering one logs a
+    * `replaced a previously registered function` WARN, and every
+    * `Conf.ensure` would log one per name. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      registry.registerFunction(
+      if (!registry.functionExists(FunctionIdentifier(name))) registry.registerFunction(
         FunctionIdentifier(name),
         new ExpressionInfo("graft.expr", name),
         builder)

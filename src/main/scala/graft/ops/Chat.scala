@@ -555,11 +555,23 @@ object Chat {
     // the relational loop merely got slow. Counting the checkpointed
     // frame is one cheap job; past the cap the identical MM arithmetic
     // runs distributed (broadcast-join rounds over the same frames).
-    if (pairs.count() > maxCollectPairs)
-      return btRelational(pairs, items, iters)
+    if (pairs.count() > maxCollectPairs) btRelational(pairs, items, iters)
+    else btDriver(pairs, items, iters)
+  }
+
+  /** Raised by both MM loops when every raw strength floors to 0 (it
+    * needs ~1e12 games per item), or when the relational loop's decimal
+    * sum overflows: strengths would otherwise be NULL. */
+  private[graft] val btDegenerate =
+    "bradleyTerry: every raw strength floored to 0 — game counts " +
+      "exceed the ppm fixed-point range; rescale or shard the input"
+
+  /** [[bradleyTerry]]'s MM loop over the collected pair and item frames. */
+  private[graft] def btDriver(pairs: DataFrame, items: DataFrame,
+                              iters: Int): DataFrame = {
     // r18: the corpus aggregates ONCE into the two checkpointed frames
-    // above, both bounded by the item alphabet (items; pairs ≤ items²)
-    // — models/policies/annotators, thousands at most — so the MM
+    // of `bradleyTerry`, both bounded by the item alphabet (items;
+    // pairs ≤ items²) — models/policies/annotators, thousands at most — so the MM
     // rounds themselves run on the driver over one bounded collect (the
     // logregTrain / IVF-centroid discipline) instead of 8 checkpointed
     // rounds of broadcast-join-aggregate (~2 jobs + 3 broadcasts each).
@@ -587,19 +599,15 @@ object Chat {
         item -> (BigInt(wins + 1) * E12) / denom
       }
       val rsum = raws.map(_._2).sum
-      // degenerate-input guard (r18 advice): if every raw floors to 0
-      // (needs ~1e12 games per item) the old relational `div _rsum`
-      // read NULL strengths; fail loudly with a message instead of
-      // surfacing a bare ArithmeticException from the division below
-      // (the dupClusters fail-loudly posture).
-      require(rsum > 0,
-        "bradleyTerry: every raw strength floored to 0 — game counts " +
-          "exceed the ppm fixed-point range; rescale or shard the input")
+      // degenerate-input guard (r18 advice): fail loudly with a message
+      // instead of surfacing a bare ArithmeticException from the
+      // division below (the dupClusters fail-loudly posture).
+      require(rsum > 0, btDegenerate)
       raws.foreach { case (item, raw) =>
         sMap(item) = ((raw * nItems * 1000000L) / rsum).toLong
       }
     }
-    val spark = games.sparkSession
+    val spark = pairs.sparkSession
     import spark.implicits._
     val strengths = itemRows.map { case (item, wins, g) =>
       (item, wins, g, sMap(item)) }.toSeq
@@ -612,9 +620,11 @@ object Chat {
     * IDENTICAL to the driver replay (decimal(38,0) products, truncating
     * div, same prior): two broadcast joins + one map-side-combined
     * aggregation per round over the pair frame, each round's strength
-    * frame checkpointed so the iterated plan never nests. */
-  private def btRelational(pairs: DataFrame, items: DataFrame,
-                           iters: Int): DataFrame = {
+    * frame checkpointed so the iterated plan never nests. A zero or
+    * NULL (overflowed) `_rsum` raises [[btDegenerate]], as the driver
+    * loop's `require` does, instead of writing NULL strengths. */
+  private[graft] def btRelational(pairs: DataFrame, items: DataFrame,
+                                  iters: Int): DataFrame = {
     val nItems = items.count()
     var s = items.select(col("item"), lit(1000000L).as("s"))
     for (_ <- 1 to iters) {
@@ -640,9 +650,9 @@ object Chat {
         .select(col("item"), col("_raw"))
       val tot = raw.agg(sum(col("_raw")).as("_rsum"))
       s = raw.crossJoin(broadcast(tot))
-        .select(col("item"), expr(
-          s"cast((cast(_raw as decimal(38,0)) * $nItems * 1000000) div _rsum as bigint)")
-          .as("s"))
+        .select(col("item"), when(col("_rsum") > 0, expr(
+          s"cast((cast(_raw as decimal(38,0)) * $nItems * 1000000) div _rsum as bigint)"))
+          .otherwise(raise_error(lit(btDegenerate))).as("s"))
         .transform(graft.plans.CheckpointAudit.local)
     }
     items.join(s, Seq("item"))

@@ -17,17 +17,27 @@ import org.apache.spark.sql.functions._
   *     which replaces (not refines) an earlier within-partition sort;
   *   - an append-time `processed_ts` audit column (init.sql:18).
   *
-  * Each micro-batch is repartitioned by month before the write so a batch
-  * produces one file per month it touches instead of
+  * A batch produces one file per month it touches instead of
   * (#partitions x #months) small files — at 100 TB the file count, not the
-  * bytes, is what kills the downstream metastore/scan planning. */
+  * bytes, is what kills the downstream metastore/scan planning. The write
+  * gets there with `coalesce(1)`, not a shuffle by month: one task sorts
+  * the batch by month and the partitioned writer rolls to a new file at
+  * each month boundary. A shuffle by month also writes each month from
+  * one task, so the files are the same, but it costs an exchange, its
+  * shuffle stage and, under adaptive execution, a job to materialize it.
+  *
+  * `coalesce(1)` also pulls everything upstream of it into that one
+  * task, so [[write]] expects a MATERIALIZED frame: a persisted batch
+  * whose cache was already filled by a parallel job, as
+  * [[graft.streaming.Fanout.processBatch]] does. Over an unmaterialized
+  * plan it is correct but computes the whole plan on one core. */
 object ParquetSink {
 
   def write(batch: DataFrame, dir: String, tsCol: String = "event_ts"): Unit =
     batch
       .withColumn("event_month", date_format(col(tsCol), "yyyy-MM"))
       .withColumn("processed_ts", current_timestamp())
-      .repartition(col("event_month"))
+      .coalesce(1)
       .sortWithinPartitions(col("event_month"), col("content_id"), col(tsCol))
       .write
       .mode("append")

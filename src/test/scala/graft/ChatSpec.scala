@@ -466,6 +466,22 @@ class ChatSpec extends SparkTestBase {
       "driver and distributed MM paths must agree exactly")
   }
 
+  test("bradleyTerry: a degenerate pair census fails loudly on the driver and the distributed path") {
+    // 1e13 games between two items that (inconsistently) won none: every
+    // raw strength floors to 0 in the first round, so the normalizing sum
+    // is 0 — the distributed loop used to read NULL strengths here
+    val n = 10000000000000L
+    val pairs = Seq((1L, 2L, n)).toDF("a", "b", "n")
+    val items = Seq((1L, 0L, n), (2L, 0L, n)).toDF("item", "wins", "games")
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    val onDriver = intercept[IllegalArgumentException](Chat.btDriver(pairs, items, 8))
+    assert(onDriver.getMessage.contains(Chat.btDegenerate), onDriver.getMessage)
+    val distributed = intercept[Exception](Chat.btRelational(pairs, items, 8).collect())
+    assert(messages(distributed).exists(_.contains(Chat.btDegenerate)),
+      messages(distributed).mkString(" <- "))
+  }
+
   test("passAtK: hand-computed estimator, boundary cases, n<k reads NULL") {
     // p1: n=4, c=1, k=2 -> 1 - C(3,2)/C(4,2) = 1 - 3/6 = 0.5
     // p2: n=3, c=0      -> 0 (no sample passes, any draw fails)

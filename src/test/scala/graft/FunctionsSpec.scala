@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 import graft.expr.Exprs
 
@@ -64,5 +70,24 @@ class FunctionsSpec extends SparkTestBase {
       spark.sql("SELECT graft_shingles(text, n) FROM t2").collect()
     }
     assert(e.getMessage.contains("literal integer"), e.getMessage)
+  }
+
+  test("Conf.ensure registers graft_* once per session: no replacement WARN on a second call") {
+    val warns = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    val session = spark.newSession() // a registry without the graft_* names
+    Conf.ensure(session)
+    root.addAppender(appender)
+    try Conf.ensure(session) finally { root.removeAppender(appender); appender.stop() }
+    val replaced = warns.asScala.filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
+    assert(session.sql("SELECT graft_simhash('the quick brown fox')").collect().head.getLong(0) ==
+      spark.sql("SELECT graft_simhash('the quick brown fox')").collect().head.getLong(0))
   }
 }

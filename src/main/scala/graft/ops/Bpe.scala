@@ -143,29 +143,47 @@ object Bpe {
     * ntok(a ++ "\n" ++ b) = ntok(a) + ntok(b) — '\n' never joins a
     * pre-token and contributes zero tokens. NULL-safe (0). The
     * [[applyMerges]] corpus pass keeps its per-partition Zipf memo;
-    * this column form is for length bookkeeping over short segments
-    * where the memo's win is marginal. */
+    * this column form keeps a per-thread, capped one ([[NtokMemo]]). */
   def ntokCol(documents: DataFrame, merges: Seq[(String, String)]): Column => Column = {
     val rankB = documents.sparkSession.sparkContext
       .broadcast(merges.zipWithIndex.toMap)
-    // Per-task Zipf memo after all (r19; the [[applyMerges]] device —
-    // "marginal" was wrong where the measure runs 3 UDF calls per turn
-    // over template-heavy segments: role headers and common words repeat
-    // constantly, and encodeWord is O(len²) rank scans per MISS). The
-    // captured map serializes empty with the closure and each task
-    // deserializes its own copy, so there is no cross-thread sharing.
-    val memo = mutable.Map.empty[String, Long]
+    // Zipf memo after all (r19; the [[applyMerges]] device — "marginal"
+    // was wrong where the measure runs 3 UDF calls per turn over
+    // template-heavy segments: role headers and common words repeat
+    // constantly, and encodeWord is O(len²) rank scans per MISS).
+    val memo = new NtokMemo
     val f = udf { (s: String) =>
       if (s == null) 0L
       else {
         val rank = rankB.value
         var n = 0L
         wordRe.findAllIn(s).foreach(w =>
-          n += memo.getOrElseUpdate(w, encodeWord(w, rank).length.toLong))
+          n += memo(w)(encodeWord(w, rank).length.toLong))
         n
       }
     }
     (c: Column) => f(c)
+  }
+
+  /** Words [[ntokCol]]'s memo keeps per thread; past it, misses just
+    * recompute. */
+  private[graft] val NtokMemoCap = 1 << 14
+
+  /** [[ntokCol]]'s word -> token count memo: per thread and capped. Each
+    * task deserializes its own copy of the UDF closure, but a UDF
+    * `ConvertToLocalRelation` folds on the driver runs the ONE captured
+    * instance, from every thread that plans a query over it. */
+  private final class NtokMemo extends Serializable {
+    @transient private lazy val local =
+      ThreadLocal.withInitial[mutable.HashMap[String, Long]](() => mutable.HashMap.empty)
+    def apply(w: String)(count: => Long): Long = {
+      val m = local.get
+      m.getOrElse(w, {
+        val n = count
+        if (m.size < NtokMemoCap) m.update(w, n)
+        n
+      })
+    }
   }
 
   /** Apply a trained merge table corpus-wide. Output per doc: the

@@ -1523,7 +1523,7 @@ object Curate {
     * benchmark set size) pass through a distinct. The per-doc longest
     * run is one benchmark-keyed window over hit positions (bounded by
     * benchmark doc length). Corpus-side cost is identical to
-    * [[decontaminateBloom]]'s scan, which the 1M-doc ScaleSmoke pins.
+    * [[decontaminateBloom]]'s scan (16.7 s at 1M docs, BENCH_NOTES.md).
     */
   def overlapReport(corpus: DataFrame, benchmark: DataFrame, n: Int = 5,
                     maxSharedRatio: Double = 0.2,

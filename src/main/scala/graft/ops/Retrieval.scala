@@ -62,7 +62,10 @@ object Retrieval {
 
   /** Inverted-index postings: one row per (token, doc) with the term
     * frequency and the doc's token count (dl). Docs with zero tokens
-    * have no postings and are invisible to retrieval (nothing to match). */
+    * have no postings and are invisible to retrieval (nothing to match).
+    * That uniqueness is [[bm25Search]]'s input contract: a union of
+    * index shards must be re-aggregated to one row per (t, doc_id)
+    * (summing tf) before it is searched. */
   def bm25Postings(documents: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text"): DataFrame =
     documents
@@ -76,7 +79,12 @@ object Retrieval {
     * the postings join, so cost is proportional to the matched postings
     * lists only. Output: (query_id, rank, doc_id, score_fx), rank 1..k
     * by score_fx DESC then doc_id ASC (total order — ties are real
-    * under integer scores and must break deterministically). */
+    * under integer scores and must break deterministically).
+    *
+    * `postings` must hold ONE row per (t, doc_id), as [[bm25Postings]]
+    * returns it: document frequency is a plain row count per term, so a
+    * duplicated (t, doc) row — say, from unioned shards not
+    * re-aggregated — silently inflates df. */
   def bm25Search(postings: DataFrame, queries: DataFrame, k: Int = 5,
                  queryIdCol: String = "query_id",
                  textCol: String = "text"): DataFrame = {

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Outbound HTTP notification sink (reference pipeline/app.py:102-108):
@@ -71,14 +71,4 @@ object HttpSink {
       .foreachPartition { (rows: Iterator[Row]) =>
         rows.foreach(r => post(cfg, r.getLong(0), r.getString(1), r.getString(2)))
       }
-
-  /** `writeStream.foreach(...)` form for direct streaming use without
-    * foreachBatch. Expects (event_id, content_id, event_type) columns. */
-  class Writer(cfg: Config) extends ForeachWriter[Row] {
-    override def open(partitionId: Long, epochId: Long): Boolean = true
-    override def process(r: Row): Unit =
-      post(cfg, r.getAs[Long]("event_id"),
-        r.getAs[String]("content_id"), r.getAs[String]("event_type"))
-    override def close(errorOrNull: Throwable): Unit = ()
-  }
 }

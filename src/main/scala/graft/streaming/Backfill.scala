@@ -29,14 +29,9 @@ object Backfill {
     // incremented on the stream-execution thread, read here after
     // awaitTermination — atomic for the cross-thread happens-before
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = transformed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        batchFn(b, id); batches.incrementAndGet(); ()
-      }
-      .start()
+    val q = Resident.start(transformed, checkpointDir, Trigger.AvailableNow()) {
+      (b, id) => batchFn(b, id); batches.incrementAndGet(); ()
+    }
     q.awaitTermination() // AvailableNow self-terminates at the drained mark
     batches.get()
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Cdc
@@ -56,13 +56,8 @@ object CdcImage {
   def start(changes: DataFrame, imageDir: String, checkpointDir: String,
             keyCols: Seq[String], versionCols: Seq[String],
             nBuckets: Int = 64): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        mergeBatch(batch, imageDir, keyCols, versionCols, nBuckets)
-      }
-      .start()
+    Resident.start(changes, checkpointDir)((batch, _) =>
+      mergeBatch(batch, imageDir, keyCols, versionCols, nBuckets))
 
   /** Read the current image: tombstones filtered, internal bucket column
     * dropped. (Compaction = rewrite buckets with tombstones removed once

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{Enrich, Parse}
@@ -94,12 +94,10 @@ object Fanout {
 
   /** Start the resident query. */
   def start(rawJson: DataFrame, dim: DataFrame, cfg: Config): StreamingQuery =
-    enriched(rawJson, dim).writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) => processBatch(batch, cfg) }
-      .start()
+    Resident.start(enriched(rawJson, dim), cfg.checkpointDir,
+      Trigger.ProcessingTime(cfg.triggerMs)) { (batch, _) =>
+      processBatch(batch, cfg)
+    }
 
   /** A1 exact semantics (what the Redis TTL trick approximates): sliding
     * 10-minute per-key counts as a watermarked windowed aggregation.

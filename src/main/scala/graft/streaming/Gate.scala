@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.DataFrame
 
 /** The quarantine-gate combinator under every intake resident
   * ([[StreamChat]], [[StreamCluster]], [[StreamContam]],
@@ -17,12 +16,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - both outputs landed through [[Ledger.write]] as `_batch`
   *    partitions with dynamic overwrite, so a replayed batch rewrites
   *    its own partitions with identical content (exactly-once without
-  *    cross-batch state — the [[StreamKmv]] ledger contract);
-  *  - the checkpointed, append-mode `foreachBatch` wiring ([[start]]).
+  *    cross-batch state — the [[StreamKmv]] ledger contract).
   *
-  * Outputs read back with [[Ledger.read]]. The checkpoint (scorer
-  * included), corpus and quarantine jobs carry job descriptions
-  * `gate: checkpoint` / `gate: corpus` / `gate: quarantine`. */
+  * Each gate starts through [[Resident.start]]; outputs read back with
+  * [[Ledger.read]]. The checkpoint (scorer included), corpus and
+  * quarantine jobs carry job descriptions `gate: checkpoint` /
+  * `gate: corpus` / `gate: quarantine`. */
 private[streaming] object Gate {
 
   /** One micro-batch: pin it, `split` it into (admitted, quarantined),
@@ -40,13 +39,4 @@ private[streaming] object Gate {
       Ledger.write(quarantined, batchId, quarantineDir)
     }
   }
-
-  /** Start a resident: checkpointed, append mode, `body` per micro-batch. */
-  def start(stream: DataFrame, checkpointDir: String)
-           (body: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) => body(batch, batchId) }
-      .start()
 }

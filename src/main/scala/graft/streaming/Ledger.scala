@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   * partition exactly as before. Only CHECKPOINT-COMMITTED batches may be
   * compacted (pass `upTo` accordingly, exactly the compactIndex rule):
   * a committed batch can never replay, so no write ever targets a
-  * label at or below the watermark.
+  * label at or below the watermark. A resident applies the rule through
+  * [[compactThrough]].
   */
 object Ledger {
 
@@ -102,6 +103,15 @@ object Ledger {
         df.where(col("_batch") >= 0 && col("_batch") <= upTo)
     }
   }
+
+  /** The in-stream compaction schedule: while processing batch
+    * `batchId`, every `every` batches, compact through `batchId` − 1 —
+    * committed before `batchId` starts, so the replay rule holds, and
+    * at least 1 (batches 0 and 1 never trigger). `every` = 0 never
+    * compacts. */
+  def compactThrough(every: Int, batchId: Long): Option[Long] =
+    if (every > 0 && batchId >= 2 && batchId % every == 0) Some(batchId - 1)
+    else None
 
   /** Land `rows` (WITHOUT a `_batch` column) as the compacted summary of
     * batches ≤ `upTo`, then drop every partition it supersedes. The

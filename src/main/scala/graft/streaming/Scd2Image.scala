@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Cdc
@@ -48,13 +48,8 @@ object Scd2Image {
   def start(changes: DataFrame, historyDir: String, checkpointDir: String,
             keyCols: Seq[String], seqCol: String,
             nBuckets: Int = 64): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        mergeBatch(batch, historyDir, keyCols, seqCol, nBuckets)
-      }
-      .start()
+    Resident.start(changes, checkpointDir)((batch, _) =>
+      mergeBatch(batch, historyDir, keyCols, seqCol, nBuckets))
 
   /** Read the history table (internal bucket column dropped). */
   def read(spark: SparkSession, historyDir: String): DataFrame =

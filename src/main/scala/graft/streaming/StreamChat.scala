@@ -42,7 +42,7 @@ object StreamChat {
   def start(conv: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             turnsCol: String = "turns"): StreamingQuery =
-    Gate.start(conv, checkpointDir)(
+    Resident.start(conv, checkpointDir)(
       gateBatch(_, _, corpusDir, quarantineDir, idCol, turnsCol))
 
   /** The admitted, rendered corpus (internal batch column dropped). */

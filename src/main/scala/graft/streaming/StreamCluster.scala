@@ -55,7 +55,7 @@ object StreamCluster {
             idCol: String = "vec_id",
             vecCol: String = "embedding"): StreamingQuery = {
     val idx = Similarity.loadKmeansIndex(vecs.sparkSession, indexPath)
-    Gate.start(vecs, checkpointDir)(
+    Resident.start(vecs, checkpointDir)(
       gateBatchWith(_, _, idx, corpusDir, quarantineDir, idCol, vecCol))
   }
 

@@ -52,7 +52,7 @@ object StreamContam {
             quarantineDir: String, checkpointDir: String,
             minCos: Double = 0.6, idCol: String = "vec_id",
             vecCol: String = "embedding"): StreamingQuery =
-    Gate.start(vectors, checkpointDir)(gateBatch(_, _, bench, corpusDir,
+    Resident.start(vectors, checkpointDir)(gateBatch(_, _, bench, corpusDir,
       quarantineDir, minCos, idCol, vecCol))
 
   /** The admitted clean vectors (internal batch column dropped). */

@@ -60,7 +60,7 @@ object StreamContamSweep {
             minCos: Double = 0.6, n: Int = 5, minOverlapPct: Long = 20L,
             idCol: String = "doc_id", textCol: String = "text",
             vecCol: String = "embedding"): StreamingQuery =
-    Gate.start(docs, checkpointDir)(gateBatch(_, _, bench, benchVecs, frozen,
+    Resident.start(docs, checkpointDir)(gateBatch(_, _, bench, benchVecs, frozen,
       corpusDir, quarantineDir, minScoreFx, minCos, n, minOverlapPct,
       idCol, textCol, vecCol))
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Pipeline
@@ -64,15 +64,10 @@ object StreamCurate {
             salt: String = "fw8", idCol: String = "doc_id",
             textCol: String = "text", langCol: String = "lang",
             domainCol: String = "source"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        curateBatch(batch, batchId, outDir, ledgerDir, modelDir, minLen,
-          maxDupWordFrac, maxTop2Frac, maxDup3Frac, capPerSource, salt,
-          idCol, textCol, langCol, domainCol)
-      }
-      .start()
+    Resident.start(docs, checkpointDir)(
+      curateBatch(_, _, outDir, ledgerDir, modelDir, minLen, maxDupWordFrac,
+        maxTop2Frac, maxDup3Frac, capPerSource, salt, idCol, textCol,
+        langCol, domainCol))
 
   /** Read the curated stream (internal batch column dropped). */
   def curated(spark: SparkSession, outDir: String): DataFrame =

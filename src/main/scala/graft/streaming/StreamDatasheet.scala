@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -62,24 +62,18 @@ object StreamDatasheet {
   }
 
   /** Start the resident census. `compactEvery` > 0 folds both ledgers
-    * every that-many batches (through b−1, committed before b starts —
-    * the [[StreamGk]] contract). */
+    * on the [[Ledger.compactThrough]] schedule. */
   def start(docs: DataFrame, volDir: String, hashDir: String,
             checkpointDir: String, compactEvery: Int = 0,
             sourceCol: String = "source", langCol: String = "lang",
             idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        countBatch(batch, batchId, volDir, hashDir, sourceCol, langCol,
-          idCol, textCol)
-        if (compactEvery > 0 && batchId >= 2 &&
-          batchId % compactEvery == 0)
-          compact(batch.sparkSession, volDir, hashDir, batchId - 1)
-      }
-      .start()
+    Resident.start(docs, checkpointDir) { (batch, batchId) =>
+      countBatch(batch, batchId, volDir, hashDir, sourceCol, langCol, idCol,
+        textCol)
+      Ledger.compactThrough(compactEvery, batchId)
+        .foreach(compact(batch.sparkSession, volDir, hashDir, _))
+    }
 
   /** The lifetime datasheet: both ledgers folded by summation, then
     * the exact q195 tail — same rounding, same modal-language

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Curate
@@ -74,22 +74,17 @@ object StreamDomainCap {
   }
 
   /** Start the resident admission gate over a streaming doc frame.
-    * `compactEvery` > 0 folds the budget ledger every that-many batches
-    * (the [[StreamGk]] contract: through b−1, committed before b). */
+    * `compactEvery` > 0 folds the budget ledger on the
+    * [[Ledger.compactThrough]] schedule. */
   def start(docs: DataFrame, outDir: String, ledgerDir: String,
             checkpointDir: String, domainCol: String = "source",
             idCol: String = "doc_id", k: Int = 1000,
             compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        capBatch(batch, batchId, outDir, ledgerDir, domainCol, idCol, k)
-        if (compactEvery > 0 && batchId >= 2 &&
-          batchId % compactEvery == 0)
-          compact(batch.sparkSession, ledgerDir, batchId - 1, domainCol)
-      }
-      .start()
+    Resident.start(docs, checkpointDir) { (batch, batchId) =>
+      capBatch(batch, batchId, outDir, ledgerDir, domainCol, idCol, k)
+      Ledger.compactThrough(compactEvery, batchId)
+        .foreach(compact(batch.sparkSession, ledgerDir, _, domainCol))
+    }
 
   /** Collapse committed ledger batches ≤ `upTo` into one per-domain
     * count partition (the [[Ledger]] negative-watermark discipline).

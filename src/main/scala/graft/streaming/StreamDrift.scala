@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Quality
@@ -62,21 +62,15 @@ object StreamDrift {
   }
 
   /** Start the resident monitor over a streaming frame. `compactEvery`
-    * > 0 folds the ledger every that-many batches (the [[StreamGk]]
-    * contract: through b−1, which is committed before b starts). */
+    * > 0 folds the ledger on the [[Ledger.compactThrough]] schedule. */
   def start(stream: DataFrame, groupCol: String, valueCol: String,
             edgesDir: String, ledgerDir: String,
             checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        countBatch(batch, batchId, groupCol, valueCol, edgesDir, ledgerDir)
-        if (compactEvery > 0 && batchId >= 2 &&
-          batchId % compactEvery == 0)
-          compact(batch.sparkSession, ledgerDir, batchId - 1)
-      }
-      .start()
+    Resident.start(stream, checkpointDir) { (batch, batchId) =>
+      countBatch(batch, batchId, groupCol, valueCol, edgesDir, ledgerDir)
+      Ledger.compactThrough(compactEvery, batchId)
+        .foreach(compact(batch.sparkSession, ledgerDir, _))
+    }
 
   /** The lifetime drift report: ledger counts summed (associative — the
     * exact stream==batch property), then the q166 report tail. Empty

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Gk
@@ -43,24 +43,17 @@ object StreamGk {
   }
 
   /** Start the resident tracker over a streaming frame.
-    * `compactEvery` > 0 folds the ledger every that-many batches
-    * (through batch b−1 while processing batch b — b−1 is
-    * checkpoint-committed before b starts, so the [[Ledger]] replay
-    * rule holds; a replay of b just re-runs the same idempotent
-    * compaction). 0 leaves compaction to the caller. */
+    * `compactEvery` > 0 folds the ledger every that-many batches on the
+    * [[Ledger.compactThrough]] schedule (a replay of a batch just re-runs
+    * the same idempotent compaction). 0 leaves compaction to the caller. */
   def start(stream: DataFrame, colName: String, eps: Double,
             ledgerDir: String, checkpointDir: String,
             compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        summaryBatch(batch, batchId, colName, eps, ledgerDir)
-        if (compactEvery > 0 && batchId >= 2 &&
-          batchId % compactEvery == 0)
-          compact(batch.sparkSession, ledgerDir, batchId - 1, eps)
-      }
-      .start()
+    Resident.start(stream, checkpointDir) { (batch, batchId) =>
+      summaryBatch(batch, batchId, colName, eps, ledgerDir)
+      Ledger.compactThrough(compactEvery, batchId)
+        .foreach(compact(batch.sparkSession, ledgerDir, _, eps))
+    }
 
   /** Lifetime summary: live per-batch summaries folded in batch order
     * (a compacted partition sorts first — it IS the fold prefix).

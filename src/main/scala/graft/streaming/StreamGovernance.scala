@@ -60,7 +60,7 @@ object StreamGovernance {
       .select(col("domain")).localCheckpoint(true)
     val robots = robotsDir.map(d => graft.ops.Web.robotsRules(
       docs.sparkSession.read.parquet(d)).localCheckpoint(true))
-    Gate.start(docs, checkpointDir)(gateBatchWith(_, _, registry, corpusDir,
+    Resident.start(docs, checkpointDir)(gateBatchWith(_, _, registry, corpusDir,
       quarantineDir, minFreMilli, idCol, urlCol, textCol, robots, bot))
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Kmv
@@ -33,20 +33,14 @@ object StreamKmv {
   }
 
   /** Start the resident tracker over a streaming frame. `compactEvery`
-    * > 0 folds the ledger every that-many batches (the [[StreamGk]]
-    * contract: through b−1, which is committed before b starts). */
+    * > 0 folds the ledger on the [[Ledger.compactThrough]] schedule. */
   def start(stream: DataFrame, colName: String, k: Int, sketchDir: String,
             checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sketchBatch(batch, batchId, colName, k, sketchDir)
-        if (compactEvery > 0 && batchId >= 2 &&
-          batchId % compactEvery == 0)
-          compact(batch.sparkSession, sketchDir, batchId - 1, k)
-      }
-      .start()
+    Resident.start(stream, checkpointDir) { (batch, batchId) =>
+      sketchBatch(batch, batchId, colName, k, sketchDir)
+      Ledger.compactThrough(compactEvery, batchId)
+        .foreach(compact(batch.sparkSession, sketchDir, _, k))
+    }
 
   /** Lifetime sketch: all per-batch partitions merged (≤ #batches·k
     * longs through one distinct + sort-limit). Before any non-empty

@@ -42,7 +42,7 @@ object StreamLicense {
   def start(docs: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    Gate.start(docs, checkpointDir)(
+    Resident.start(docs, checkpointDir)(
       gateBatch(_, _, corpusDir, quarantineDir, idCol, textCol))
 
   /** The admitted, permissively-licensed corpus. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Dedup
@@ -76,14 +76,9 @@ private[streaming] object StreamMediaDedup {
             checkpointDir: String, sigOf: Column => Column,
             localSurvivors: DataFrame => DataFrame,
             maxHamming: Int, blocks: Int, maxBucket: Int): StreamingQuery =
-    assets.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        dedupBatch(batch, batchId, corpusDir, indexDir, sigOf, localSurvivors,
-          maxHamming, blocks, maxBucket)
-      }
-      .start()
+    Resident.start(assets, checkpointDir)(
+      dedupBatch(_, _, corpusDir, indexDir, sigOf, localSurvivors,
+        maxHamming, blocks, maxBucket))
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =

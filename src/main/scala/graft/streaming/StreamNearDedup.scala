@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Dedup
@@ -69,14 +69,9 @@ object StreamNearDedup {
             checkpointDir: String, tau: Double = 0.7, bands: Int = 8,
             rowsPerBand: Int = 4, n: Int = 3,
             maxBucket: Int = 1000): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        dedupBatch(batch, batchId, corpusDir, indexDir, tau, bands,
-          rowsPerBand, n, maxBucket)
-      }
-      .start()
+    Resident.start(docs, checkpointDir)(
+      dedupBatch(_, _, corpusDir, indexDir, tau, bands, rowsPerBand, n,
+        maxBucket))
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =

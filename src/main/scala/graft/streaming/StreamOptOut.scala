@@ -49,7 +49,7 @@ object StreamOptOut {
             urlCol: String = "url", idCol: String = "doc_id"): StreamingQuery = {
     val registry = docs.sparkSession.read.parquet(registryDir)
       .select(col("domain")).localCheckpoint(true)
-    Gate.start(docs, checkpointDir)(
+    Resident.start(docs, checkpointDir)(
       gateBatchWith(_, _, registry, corpusDir, droppedDir, urlCol, idCol))
   }
 

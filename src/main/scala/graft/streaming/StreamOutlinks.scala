@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.LinkGraph
@@ -35,13 +35,8 @@ object StreamOutlinks {
   def start(pages: DataFrame, linksDir: String, checkpointDir: String,
             idCol: String = "doc_id", urlCol: String = "url",
             htmlCol: String = "html"): StreamingQuery =
-    pages.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        harvestBatch(batch, batchId, linksDir, idCol, urlCol, htmlCol)
-      }
-      .start()
+    Resident.start(pages, checkpointDir)(
+      harvestBatch(_, _, linksDir, idCol, urlCol, htmlCol))
 
   /** The accumulated edge ledger (any prefix is a valid graph). */
   def links(spark: SparkSession, linksDir: String): DataFrame =

@@ -56,7 +56,7 @@ object StreamPii {
   def start(docs: DataFrame, corpusDir: String, quarantineDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    Gate.start(docs, checkpointDir)(
+    Resident.start(docs, checkpointDir)(
       gateBatch(_, _, corpusDir, quarantineDir, idCol, textCol))
 
   /** The admitted, scrubbed corpus (internal batch column dropped). */

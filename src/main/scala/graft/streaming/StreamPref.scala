@@ -44,7 +44,7 @@ object StreamPref {
             checkpointDir: String, idCol: String = "pair_id",
             chosenCol: String = "chosen",
             rejectedCol: String = "rejected"): StreamingQuery =
-    Gate.start(pairs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
+    Resident.start(pairs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
       idCol, chosenCol, rejectedCol))
 
   /** The admitted pair corpus (internal batch column dropped). */

@@ -43,7 +43,7 @@ object StreamReadability {
             checkpointDir: String, minMilli: Long = 30000L,
             idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    Gate.start(docs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
+    Resident.start(docs, checkpointDir)(gateBatch(_, _, corpusDir, quarantineDir,
       minMilli, idCol, textCol))
 
   /** The admitted, readable corpus. */

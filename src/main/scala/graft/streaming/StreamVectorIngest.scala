@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.GraphAnn
 
@@ -66,15 +66,11 @@ object StreamVectorIngest {
             idCol: String = "vec_id",
             vecCol: String = "embedding",
             compactEvery: Int = DefaultCompactEvery): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch, indexPath, idCol, vecCol)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          GraphAnn.compactGraphIndex(batch.sparkSession, indexPath)
-      }
-      .start()
+    Resident.start(vectors, checkpointDir) { (batch, batchId) =>
+      ingestBatch(batch, indexPath, idCol, vecCol)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        GraphAnn.compactGraphIndex(batch.sparkSession, indexPath)
+    }
 
   /** Search the live index (any prefix of the stream is searchable). */
   def search(spark: SparkSession, indexPath: String, queries: DataFrame,

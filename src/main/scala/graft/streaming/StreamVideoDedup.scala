@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Dedup
@@ -81,13 +81,8 @@ object StreamVideoDedup {
   def start(assets: DataFrame, corpusDir: String, indexDir: String,
             checkpointDir: String, n: Int = 2, minJaccard: Double = 0.5,
             maxDf: Long = 1000L): StreamingQuery =
-    assets.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        dedupBatch(batch, batchId, corpusDir, indexDir, n, minJaccard, maxDf)
-      }
-      .start()
+    Resident.start(assets, checkpointDir)(
+      dedupBatch(_, _, corpusDir, indexDir, n, minJaccard, maxDf))
 
   /** Read the admitted corpus (internal batch column dropped). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =

@@ -77,4 +77,48 @@ class BpeSpec extends SparkTestBase {
       assert(got(i.toLong) == ref(t), s"row $i: ${got(i.toLong)} vs ${ref(t)}")
     }
   }
+
+  private def ntokRef(rank: Map[(String, String), Int])(s: String): Long =
+    if (s == null) 0L
+    else Bpe.wordRe.findAllIn(s).map(w => Bpe.encodeWord(w, rank).length.toLong).sum
+
+  test("ntokCol: more distinct words than the memo cap still count exactly") {
+    import org.apache.spark.sql.functions.col
+    val merges = Bpe.trainLocal(Seq("abab baba abc cab bca"), 8)
+    // every word distinct (base-26 spelled), 2,000 more than the cap,
+    // all in ONE task so one thread's memo fills and then only misses
+    def word(i: Int): String =
+      Iterator.iterate(i)(_ / 26).takeWhile(_ > 0).map(d => ('a' + d % 26).toChar).mkString + "ab"
+    val texts = (1 to Bpe.NtokMemoCap + 2000).map(word).grouped(100).map(_.mkString(" ")).toSeq
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text").repartition(1)
+    val got = df.select(col("doc_id"), Bpe.ntokCol(df, merges)(col("text")).as("n"))
+      .as[(Long, Long)].collect().toMap
+    val ref = ntokRef(merges.zipWithIndex.toMap) _
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(got(i.toLong) == ref(t), s"row $i: ${got(i.toLong)} vs ${ref(t)}")
+    }
+  }
+
+  test("ntokCol: concurrent queries over a driver-folded LocalRelation count exactly") {
+    import java.util.concurrent.Executors
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.col
+    val merges = Bpe.trainLocal(Seq("aaab aaab ab abc"), 4)
+    val texts = (0 until 400).map(i => (0 until 20).map(j => s"ab${(i * 20 + j) % 3000}x aaab").mkString(" "))
+    val df = texts.toDF("text")
+    val ntok = Bpe.ntokCol(df, merges)
+    def counts(): Seq[Long] = df.select(ntok(col("text"))).as[Long].collect().toSeq
+    assert(df.select(ntok(col("text"))).queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "the UDF must be folded on the driver for this case to share one closure")
+    val want = texts.map(ntokRef(merges.zipWithIndex.toMap))
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val runs = Future.sequence((1 to 8).map(_ => Future(counts())))
+      Await.result(runs, 5.minutes).foreach(got => assert(got == want))
+    } finally pool.shutdown()
+  }
 }

@@ -36,7 +36,7 @@ class GopherFastSpec extends SparkTestBase {
       (2L, "é ü é ü é 中 文 中 文"),
       // astral codepoints: UTF-16 String ordering would break ties wrong
       (3L, "😀 z 😀 z 😀"),
-      // 1000x duplicated boilerplate line (the ScaleSmoke skew shape)
+      // 1000x duplicated boilerplate line (the skew shape of the 1M-doc scale runs, BENCH_NOTES.md)
       (4L, Seq.fill(500)("click here now").mkString(" ")),
       // mixed case + punctuation-glued tokens
       (5L, "The the THE the. The the."),

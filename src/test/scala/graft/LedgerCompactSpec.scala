@@ -36,6 +36,20 @@ class LedgerCompactSpec extends SparkTestBase {
     assert(spark.conf.getOption(key) == before)
   }
 
+  test("Ledger.compactThrough: the in-stream schedule, batch by batch") {
+    val table = Seq(
+      // (every, batchId, compact through)
+      (0, 0L, None), (0, 2L, None), (0, 6L, None),
+      (1, 0L, None), (1, 1L, None), (1, 2L, Some(1L)), (1, 3L, Some(2L)),
+      (3, 0L, None), (3, 1L, None), (3, 2L, None), (3, 3L, Some(2L)),
+      (3, 4L, None), (3, 5L, None), (3, 6L, Some(5L)), (3, 7L, None),
+      (2, 2L, Some(1L)))
+    table.foreach { case (every, batchId, want) =>
+      assert(Ledger.compactThrough(every, batchId) == want,
+        s"every=$every batchId=$batchId")
+    }
+  }
+
   test("GK: compaction preserves lifetime quantiles exactly; ledger bounded") {
     val dir = Files.createTempDirectory("lcg").toString + "/led"
     StreamGk.summaryBatch((1 to 4000).map(i => ((i * i) % 997).toDouble).toDF("x"),

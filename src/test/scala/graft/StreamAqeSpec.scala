@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.streaming.ProcessingTimeTrigger
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
-import graft.streaming.Fanout
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.streaming.{Fanout, StreamPii}
 
 /** `Conf.ensure` turns adaptive execution off for stateless stream plans
   * only: batch queries and `foreachBatch` bodies still plan adaptively. */
@@ -59,5 +61,22 @@ class StreamAqeSpec extends SparkTestBase {
       }.start()
     try { input.addData(1 to 20); q.processAllAvailable() } finally q.stop()
     assert(bodies.asScala.toSeq == Seq(true))
+  }
+
+  test("Fanout and a gate keep their triggers through the one start") {
+    implicit val ctx = spark.sqlContext
+    def trigger(q: StreamingQuery) =
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
+    val tmp = Files.createTempDirectory("graft-stream-trigger").toString
+    val fan = Fanout.start(MemoryStream[String].toDF().select(col("value").as("json")), dim,
+      Fanout.Config(checkpointDir = s"$tmp/fan-ckpt", triggerMs = 3000L))
+    try {
+      val gate = StreamPii.start(MemoryStream[(Long, String)].toDF().toDF("doc_id", "text"),
+        s"$tmp/corpus", s"$tmp/quarantine", s"$tmp/gate-ckpt")
+      try {
+        assert(trigger(fan) == ProcessingTimeTrigger(3000L))
+        assert(trigger(gate) == ProcessingTimeTrigger(0L))
+      } finally gate.stop()
+    } finally fan.stop()
   }
 }
